@@ -385,8 +385,11 @@ object Bench {
     // flush — it must be the LAST line on stdout (build.sbt inherits
     // stdout for forked runs and suppresses sbt's success banner so the
     // line arrives bare, not "[info] "-prefixed).
-    spark.stop()
-    println(mainLine)
-    System.out.flush()
+    // A failing stop still rethrows, but only after the line is out.
+    try spark.stop()
+    finally {
+      println(mainLine)
+      System.out.flush()
+    }
   }
 }

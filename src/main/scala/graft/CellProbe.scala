@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * per data point. Usage:
   * `runMain graft.CellProbe <cell> [sfDir] [scale] [runs]` —
   * cells: knn_join_exact, ivf_blocked_join, index_ingest, stream_retract,
-  * hnsw_serve_tombstoned,
-  * image_neardup, label_noise_audit, knn_scan_topk. */
+  * hnsw_serve_tombstoned, image_neardup, label_noise_audit,
+  * span_dedup_bloom, line_dedup_split, knn_scan_topk. */
 object CellProbe {
   import ScaleBench.expandEmb
 

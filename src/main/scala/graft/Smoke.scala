@@ -22,7 +22,7 @@ object Smoke {
 
     // dim-mismatch must raise (NeuronDB/src/core/distance.c:27-36)
     try {
-      spark.range(1).select(functions.VectorFunctions.l2Udf(
+      spark.range(1).select(plans.DistanceExpressions.l2(
         lit(Array(1f, 2f)), lit(Array(1f, 2f, 3f)))).collect()
       println("PROBE_DIM=NO_ERROR")
     } catch {

@@ -5,9 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** One-call registration of the full SQL function surface — the analog of
   * installing the reference extension (`CREATE EXTENSION neurondb`). After
   * this, `spark.sql` can use every `vector_*`, `embed_*`, quantization,
-  * text-analysis and sparse function by its reference name. */
+  * text-analysis and sparse function by its reference name; the
+  * distances resolve to the native expressions, never to a UDF. */
 object GraftFunctions {
   def registerAll(spark: SparkSession): Unit = {
+    graft.plans.DistanceExpressions.register(spark)
     VectorFunctions.register(spark)
     VectorAggregates.register(spark)
     Embeddings.register(spark)

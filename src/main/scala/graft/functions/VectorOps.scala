@@ -4,6 +4,12 @@ package graft.functions
  * Pure-Scala vector kernels: distance metrics, norms and element-wise
  * operations over dense `Array[Float]` vectors.
  *
+ * The distances here are the driver- and task-side ones (HNSW walk, IVF
+ * routing, PQ, rerank): the six hot metrics, bit-identical to their
+ * `ArrayData` twins in [[graft.plans.DistanceExpressions]], plus cosine
+ * similarity and Mahalanobis. The long-tail metrics (Hamming, Jaccard,
+ * Minkowski, ...) live only in `DistanceExpressions`.
+ *
  * Numeric contract (reference parity): every kernel upcasts `float`
  * elements to `double` before accumulating, as the reference C does
  * (`NeuronDB/src/core/distance.c:62,102-103`). L2 / squared-L2 use Kahan
@@ -83,77 +89,6 @@ object VectorOps {
     sum
   }
 
-  /** Count of unequal coordinates (NeuronDB/src/core/distance.c:218-252). */
-  def hamming(a: Array[Float], b: Array[Float]): Int = {
-    checkDims(a, b)
-    var n = 0; var i = 0
-    while (i < a.length) { if (a(i) != b(i)) n += 1; i += 1 }
-    n
-  }
-
-  def chebyshev(a: Array[Float], b: Array[Float]): Double = {
-    checkDims(a, b)
-    var m = 0.0; var i = 0
-    while (i < a.length) {
-      val d = math.abs(a(i).toDouble - b(i).toDouble)
-      if (d > m) m = d
-      i += 1
-    }
-    m
-  }
-
-  /** p<=0 / NaN / Inf error; p=1/2/large shortcuts (NeuronDB/src/core/distance.c:290-369). */
-  def minkowski(a: Array[Float], b: Array[Float], p: Double): Double = {
-    checkDims(a, b)
-    if (p <= 0 || p.isNaN || p.isInfinite)
-      throw new IllegalArgumentException("p must be positive and finite")
-    if (p == 1.0) l1(a, b)
-    else if (p == 2.0) l2(a, b)
-    else if (p > 1e10) chebyshev(a, b)
-    else {
-      var sum = 0.0; var i = 0
-      while (i < a.length) {
-        sum += math.pow(math.abs(a(i).toDouble - b(i).toDouble), p)
-        i += 1
-      }
-      math.pow(sum, 1.0 / p)
-    }
-  }
-
-  private final val NonZeroEps = 1e-10
-
-  /** Set-style Jaccard over |x|>1e-10 support; empty union -> 0.0
-    * (NeuronDB/src/vector/vector_distance.c:453-496). */
-  def jaccard(a: Array[Float], b: Array[Float]): Double = {
-    checkDims(a, b)
-    var inter = 0; var union = 0; var i = 0
-    while (i < a.length) {
-      val an = math.abs(a(i).toDouble) > NonZeroEps
-      val bn = math.abs(b(i).toDouble) > NonZeroEps
-      if (an && bn) inter += 1
-      if (an || bn) union += 1
-      i += 1
-    }
-    if (union == 0) 0.0 else 1.0 - inter.toDouble / union
-  }
-
-  /** (NeuronDB/src/vector/vector_distance.c:497-543) */
-  def dice(a: Array[Float], b: Array[Float]): Double = {
-    checkDims(a, b)
-    var inter = 0; var ca = 0; var cb = 0; var i = 0
-    while (i < a.length) {
-      val an = math.abs(a(i).toDouble) > NonZeroEps
-      val bn = math.abs(b(i).toDouble) > NonZeroEps
-      if (an && bn) inter += 1
-      if (an) ca += 1
-      if (bn) cb += 1
-      i += 1
-    }
-    if (ca == 0 && cb == 0) 0.0
-    else if (ca == 0 || cb == 0) 1.0
-    else 1.0 - 2.0 * inter / (ca + cb)
-  }
-
   /** Diagonal-inverse-covariance Mahalanobis; null cov falls back to L2;
     * non-positive / non-finite inv-var errors (NeuronDB/src/vector/vector_distance.c:545-595). */
   def mahalanobis(a: Array[Float], b: Array[Float], covInv: Array[Float]): Double = {
@@ -172,94 +107,6 @@ object VectorOps {
       i += 1
     }
     math.sqrt(sum)
-  }
-
-  /** sum|a-b| / sum|a+b|; zero denominator errors
-    * (exercised by NeuronDB/sql/03_distance_metrics.sql:138-151). */
-  def brayCurtis(a: Array[Float], b: Array[Float]): Double = {
-    checkDims(a, b)
-    var num = 0.0; var den = 0.0; var i = 0
-    while (i < a.length) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      num += math.abs(x - y); den += math.abs(x + y)
-      i += 1
-    }
-    if (den == 0.0)
-      throw new IllegalArgumentException("bray-curtis distance undefined for zero denominator")
-    num / den
-  }
-
-  /** sum(|a-b|/(|a|+|b|)) skipping both-zero coords; all-zero input errors
-    * (exercised by NeuronDB/sql/03_distance_metrics.sql:157-169). */
-  def canberra(a: Array[Float], b: Array[Float]): Double = {
-    checkDims(a, b)
-    var sum = 0.0; var anyNonZero = false; var i = 0
-    while (i < a.length) {
-      val x = math.abs(a(i).toDouble); val y = math.abs(b(i).toDouble)
-      if (x + y > 0.0) { anyNonZero = true; sum += math.abs(a(i).toDouble - b(i).toDouble) / (x + y) }
-      i += 1
-    }
-    if (!anyNonZero)
-      throw new IllegalArgumentException("canberra distance undefined for all-zero vectors")
-    sum
-  }
-
-  @inline private def binaryCounts(a: Array[Float], b: Array[Float]): (Int, Int, Int, Int) = {
-    checkDims(a, b)
-    var n11 = 0; var n00 = 0; var n10 = 0; var n01 = 0; var i = 0
-    while (i < a.length) {
-      val an = math.abs(a(i).toDouble) > NonZeroEps
-      val bn = math.abs(b(i).toDouble) > NonZeroEps
-      if (an && bn) n11 += 1
-      else if (an && !bn) n10 += 1
-      else if (!an && bn) n01 += 1
-      else n00 += 1
-      i += 1
-    }
-    (n11, n00, n10, n01)
-  }
-
-  /** Simple matching distance: mismatches / dim (NeuronDB/sql/03_distance_metrics.sql:180). */
-  def sokalMichener(a: Array[Float], b: Array[Float]): Double = {
-    val (_, _, n10, n01) = binaryCounts(a, b)
-    if (a.length == 0) 0.0 else (n10 + n01).toDouble / a.length
-  }
-
-  /** 2R/(S+2R) with R = mismatches, S = matches (NeuronDB/sql/03_distance_metrics.sql:183). */
-  def rogersTanimoto(a: Array[Float], b: Array[Float]): Double = {
-    val (n11, n00, n10, n01) = binaryCounts(a, b)
-    val r = n10 + n01
-    val denom = n11 + n00 + 2.0 * r
-    if (denom == 0.0) 0.0 else 2.0 * r / denom
-  }
-
-  /** 1 - n11/dim (NeuronDB/sql/03_distance_metrics.sql:189-191). */
-  def russellRao(a: Array[Float], b: Array[Float]): Double = {
-    val (n11, _, _, _) = binaryCounts(a, b)
-    if (a.length == 0) 0.0 else 1.0 - n11.toDouble / a.length
-  }
-
-  /** Matching coefficient similarity: matches / dim (NeuronDB/sql/03_distance_metrics.sql:192). */
-  def matchingCoefficient(a: Array[Float], b: Array[Float]): Double = {
-    val (n11, n00, _, _) = binaryCounts(a, b)
-    if (a.length == 0) 0.0 else (n11 + n00).toDouble / a.length
-  }
-
-  /** Dispatch used by kNN / IVF / search operators. */
-  def distance(metric: String)(a: Array[Float], b: Array[Float]): Double = metric match {
-    case "l2" | "euclidean"        => l2(a, b)
-    case "sq_l2" | "squared_l2"    => squaredL2(a, b)
-    case "ip" | "inner_product"    => innerProductDistance(a, b)
-    case "cosine"                  => cosineDistance(a, b)
-    case "l1" | "manhattan" | "cityblock" => l1(a, b)
-    case "hamming"                 => hamming(a, b).toDouble
-    case "chebyshev"               => chebyshev(a, b)
-    case "jaccard"                 => jaccard(a, b)
-    case "dice"                    => dice(a, b)
-    case "braycurtis"              => brayCurtis(a, b)
-    case "canberra"                => canberra(a, b)
-    case other =>
-      throw new IllegalArgumentException(s"unknown distance metric: $other")
   }
 
   // ---------------------------------------------------------------------

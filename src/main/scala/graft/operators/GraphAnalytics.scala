@@ -248,7 +248,8 @@ object GraphAnalytics {
     * returns the composed lazy plan — the PlanShapeSpec hook (the
     * incrementalDedup convention); production callers always
     * materialize (the AeFixpoint contract: the result must not
-    * re-derive the unpersisted adjacency). */
+    * re-derive the unpersisted adjacency). The adjacency is unpersisted
+    * on both paths; the lazy plan recomputes it from lineage. */
   private[graft] def labelPropagation(edges: DataFrame, iterations: Int,
                                       materialize: Boolean): DataFrame = {
     require(iterations >= 1, s"iterations must be positive: $iterations")
@@ -266,13 +267,15 @@ object GraphAnalytics {
       for (t <- 1 to iterations) {
         val counts = adj.join(lab.select(col("id").as("nb"), col("label")), "nb")
           .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
-        // r16: the majority pick is a hash aggregate, not a ranking
-        // window — min(struct(-c, label)) is lexicographically the same
-        // choice as row_number() over (ORDER BY c DESC, label) = 1
-        // (largest count, ties to the SMALLEST label; negating the
-        // count is safe: c is count(*) >= 1). A hash aggregate gets
-        // map-side partial aggregation and skips the per-round sort the
-        // window needed (guide §2.3 "aggregate before you shuffle").
+        // r16: the majority pick is an aggregate, not a ranking window —
+        // min(struct(-c, label)) is lexicographically the same choice as
+        // row_number() over (ORDER BY c DESC, label) = 1 (largest count,
+        // ties to the SMALLEST label; negating the count is safe: c is
+        // count(*) >= 1). The struct-typed min plans as a SortAggregate
+        // (plans/r16/community_labelprop_round_after.txt), which still
+        // gets map-side partial aggregation and replaces the window's
+        // sort over every (node, label) count (guide §2.3 "aggregate
+        // before you shuffle").
         val pick = counts
           .groupBy(col("node").as("id"))
           .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("m"))
@@ -285,7 +288,7 @@ object GraphAnalytics {
       }
       val out = lab.select(col("id"), col("label").as("community"))
       if (materialize) out.localCheckpoint(true) else out
-    } finally { if (materialize) adj.unpersist() else () }
+    } finally adj.unpersist()
   }
 
   /** Integer PageRank over `edges(src, dst)`; returns (id, score) with

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{VectorFunctions => VF, VectorOps}
+import graft.functions.VectorOps
 
 /**
  * k-NN / similarity-join operators (SURVEY §2.5).
@@ -21,9 +21,8 @@ import graft.functions.{VectorFunctions => VF, VectorOps}
  */
 object Knn {
 
-  /** Hot metrics go through native Catalyst expressions (no per-element
-    * boxing, codegen-friendly — see graft.plans.DistanceExpressions);
-    * long-tail metrics stay UDFs. Same kernels, identical results. */
+  /** Every metric is a native Catalyst expression (no per-element
+    * boxing, codegen-friendly — see graft.plans.DistanceExpressions). */
   def distCol(metric: String)(a: Column, b: Column): Column = metric match {
     case "l2" | "euclidean"     => graft.plans.DistanceExpressions.l2(a, b)
     case "cosine"               => graft.plans.DistanceExpressions.cosine(a, b)

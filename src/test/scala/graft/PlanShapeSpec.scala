@@ -60,12 +60,38 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(physical.contains("*("), s"no whole-stage codegen span: $physical")
   }
 
+  test("v_distances runs every metric natively, minkowski included — no ScalaUDF") {
+    val physical = planOf(SparkEntry.queries("v_distances")(spark, dir))
+    assert(!physical.contains("UDF("), s"boxed UDF in the metric scan: $physical")
+    assert(physical.contains("vector_minkowski_distance"), physical)
+  }
+
+  test("every registered distance name resolves to its native expression") {
+    plans.DistanceExpressions.register(spark)
+    for ((name, _) <- plans.DistanceExpressions.sqlFunctions) {
+      val p = if (name == "vector_minkowski_distance") ", 3" else ""
+      val analyzed = spark.sql(
+        s"SELECT $name(a, b$p) FROM VALUES (array(1.0F, 2.0F), array(3.0F, 4.0F)) AS t(a, b)")
+        .queryExecution.analyzed
+      val exprs = analyzed.expressions.flatMap(_.collect { case e => e })
+      assert(!exprs.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]),
+        s"$name resolved to a UDF: $analyzed")
+      assert(exprs.exists(_.prettyName == name), s"$name not in: $analyzed")
+    }
+  }
+
   test("label propagation rounds pick the majority by aggregate — no per-round ranking window") {
     import spark.implicits._
     val edges = (0 until 40).map(i => (i.toLong, ((i + 1) % 40).toLong))
       .toDF("src", "dst")
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val plan = planOf(operators.GraphAnalytics
       .labelPropagation(edges, 2, materialize = false))
+    // the lazy path releases the adjacency cache too; only the local
+    // checkpoint of the node set, which the returned plan reads, stays
+    val leaked = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, rdd) => !persistedBefore(id) && !rdd.isCheckpointed }
+    assert(leaked.isEmpty, leaked.values.map(_.toDebugString).mkString("\n"))
     assert(!plan.contains("Window"), s"ranking window in the round: $plan")
     // the min(struct(-c, label)) pick must combine map-side
     assert(plan.contains("partial_min"), s"no map-side partial pick: $plan")

@@ -150,6 +150,28 @@ class SqlSurfaceSpec extends SparkSpecBase {
     assert(r.getLong(3) == 0xAAAAAAAAL && r.getLong(4) == 0x55555555L)
   }
 
+  test("distances coerce int, decimal and double arrays to array<float>") {
+    // the same metric over the same values typed four ways: implicit casts
+    // must make every non-float call equal the array<float> one
+    def sameAcross(call: String => String): Unit = {
+      val typed = Seq("int" -> "", "decimal" -> ".0", "double" -> ".0D", "float" -> ".0F")
+      val r = spark.sql("SELECT " + typed.map { case (t, suffix) => s"${call(suffix)} AS $t" }
+        .mkString(", ")).head()
+      val want = r.getDouble(3)
+      for (i <- 0 to 2) assert(r.getDouble(i) == want, s"${call("?")} col $i: $r")
+    }
+    def arr(xs: Int*)(suffix: String) = xs.map(x => s"$x$suffix").mkString("array(", ", ", ")")
+    sameAcross(s => s"vector_l2_distance(${arr(1, 2)(s)}, ${arr(3, 4)(s)})")
+    sameAcross(s => s"vector_jaccard_distance(${arr(1, 0, 2)(s)}, ${arr(0, 0, 3)(s)})")
+    sameAcross(s => s"vector_minkowski_distance(${arr(1, 2, 3)(s)}, ${arr(4, 6, 8)(s)}, 3)")
+    val r = spark.sql(
+      """SELECT vector_l2_distance(array(1, 2), array(3, 4)),
+        |  vector_minkowski_distance(array(1.0F, 2.0F), array(4.0F, 6.0F), 3),
+        |  vector_minkowski_distance(array(1.0F, 2.0F), array(4.0F, 6.0F), 3.0D)""".stripMargin).head()
+    assert(math.abs(r.getDouble(0) - math.sqrt(8.0)) < 1e-12)
+    assert(r.getDouble(1) == r.getDouble(2), s"int p differs from double p: $r")
+  }
+
   test("STRICT null semantics: NULL vector in -> NULL out across the surface") {
     // the reference declares these functions STRICT; a NULL embedding row
     // must yield NULL, not crash the job
@@ -165,16 +187,15 @@ class SqlSurfaceSpec extends SparkSpecBase {
   }
 
   test("null vector ELEMENTS error on both the UDF and the promoted native path") {
-    graft.plans.GraftOptimizations.install(spark)
     import spark.implicits._
     // parquet round-trip: over a LocalRelation, ConvertToLocalRelation
-    // folds the projection before the experimental batch can promote it
+    // would fold the projection at optimization time
     val dir = java.nio.file.Files.createTempDirectory("badvecs").toString
     Seq((Seq(Some(1.0f), None, Some(3.0f)), Seq(Some(1.0f), Some(2.0f), Some(3.0f))))
       .toDF("a", "b").write.mode("overwrite").parquet(dir)
     val bad = spark.read.parquet(dir)
     bad.createOrReplaceTempView("bad_vecs")
-    // SQL path (promoted to the native expression by the optimizer rule)
+    // SQL path (the registered name resolves to the native expression)
     val sqlDf = spark.sql("SELECT vector_l2_distance(a, b) FROM bad_vecs")
     assert(!sqlDf.queryExecution.optimizedPlan.toString.toLowerCase.contains("scalaudf"))
     val e1 = intercept[Exception](sqlDf.collect())

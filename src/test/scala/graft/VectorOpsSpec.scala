@@ -2,7 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.catalyst.util.ArrayData
+
 import graft.functions.{Embeddings, VectorOps => V}
+import graft.plans.{DistanceExpressions => DE}
 
 class VectorOpsSpec extends AnyFunSuite {
 
@@ -30,31 +33,40 @@ class VectorOpsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](V.add(Array(1f), Array(1f, 2f)))
   }
 
+  // The long-tail metrics have one kernel, the ArrayData one the SQL
+  // and Column surfaces evaluate; these goldens pin it directly.
+  private def ad(v: Array[Float]): ArrayData = ArrayData.toArrayData(v)
+  private val (ad1, ad2) = (ad(a), ad(b))
+
   test("hamming counts unequal coords") {
-    assert(V.hamming(Array(1f, 2f, 3f), Array(1f, 0f, 3f)) == 1)
+    assert(DE.hammingData(ad(Array(1f, 2f, 3f)), ad(Array(1f, 0f, 3f))) == 1.0)
   }
 
   test("minkowski shortcuts and p<=0 error (distance.c:290-369)") {
-    assert(math.abs(V.minkowski(a, b, 1.0) - V.l1(a, b)) < 1e-12)
-    assert(math.abs(V.minkowski(a, b, 2.0) - V.l2(a, b)) < 1e-12)
-    assert(math.abs(V.minkowski(a, b, 1e11) - V.chebyshev(a, b)) < 1e-12)
-    intercept[IllegalArgumentException](V.minkowski(a, b, 0.0))
-    intercept[IllegalArgumentException](V.minkowski(a, b, -1.0))
+    assert(math.abs(DE.minkowskiData(ad1, ad2, 1.0) - DE.l1Data(ad1, ad2)) < 1e-12)
+    assert(math.abs(DE.minkowskiData(ad1, ad2, 2.0) - DE.l2Data(ad1, ad2)) < 1e-12)
+    assert(math.abs(DE.minkowskiData(ad1, ad2, 1e11) - DE.chebyshevData(ad1, ad2)) < 1e-12)
+    // general p: (3³ + 3³ + 3³)^(1/3)
+    assert(math.abs(DE.minkowskiData(ad1, ad2, 3.0) - math.cbrt(81.0)) < 1e-12)
+    intercept[IllegalArgumentException](DE.minkowskiData(ad1, ad2, 0.0))
+    intercept[IllegalArgumentException](DE.minkowskiData(ad1, ad2, -1.0))
   }
 
   test("jaccard support semantics; both-zero -> 0 (vector_distance.c:453-496)") {
-    assert(math.abs(V.jaccard(Array(1f, 1f, 0f), Array(1f, 0f, 1f)) - (1.0 - 1.0 / 3.0)) < 1e-12)
-    assert(V.jaccard(Array(0f, 0f), Array(0f, 0f)) == 0.0)
+    assert(math.abs(DE.jaccardData(ad(Array(1f, 1f, 0f)), ad(Array(1f, 0f, 1f))) -
+      (1.0 - 1.0 / 3.0)) < 1e-12)
+    assert(DE.jaccardData(ad(Array(0f, 0f)), ad(Array(0f, 0f))) == 0.0)
   }
 
   test("dice (vector_distance.c:497-543)") {
-    assert(math.abs(V.dice(Array(1f, 1f, 0f), Array(1f, 0f, 1f)) - 0.5) < 1e-12)
+    assert(math.abs(DE.diceData(ad(Array(1f, 1f, 0f)), ad(Array(1f, 0f, 1f))) - 0.5) < 1e-12)
   }
 
   test("bray-curtis / canberra all-zero error (sql/03_distance_metrics.sql:142-168)") {
-    intercept[IllegalArgumentException](V.brayCurtis(Array(0f, 0f), Array(0f, 0f)))
-    intercept[IllegalArgumentException](V.canberra(Array(0f, 0f), Array(0f, 0f)))
-    assert(math.abs(V.brayCurtis(Array(1f, 2f), Array(3f, 4f)) - 4.0 / 10.0) < 1e-12)
+    val z = ad(Array(0f, 0f))
+    intercept[IllegalArgumentException](DE.brayCurtisData(z, z))
+    intercept[IllegalArgumentException](DE.canberraData(z, z))
+    assert(math.abs(DE.brayCurtisData(ad(Array(1f, 2f)), ad(Array(3f, 4f))) - 4.0 / 10.0) < 1e-12)
   }
 
   test("mahalanobis: null cov -> l2; bad inv-var errors (vector_distance.c:545-595)") {
